@@ -3,6 +3,9 @@ DuckDB oracle can't express — LSH candidate soundness, ANN recall."""
 
 from __future__ import annotations
 
+import hashlib
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from tpc_di_etl_using_pyspark_spark.llm.minhash import (
@@ -70,6 +73,35 @@ def test_simhash_fingerprint_properties(spark, sf_dir):
         fps.groupBy("orig").agg(F.countDistinct("simhash").alias("n")).agg(F.max("n")).first()[0]
     )
     assert distinct_per_orig == 1
+
+
+def _py_simhash(text: str) -> int:
+    """Reference SimHash from first principles: per distinct word, the
+    first 15 hex chars of its md5 vote count-weighted ±1 on each of the
+    60 bits; a bit is set iff its vote sum is positive."""
+    votes = [0] * 60
+    for word, cnt in Counter(text.lower().split(" ")).items():
+        h = int(hashlib.md5(word.encode()).hexdigest()[:15], 16)
+        for i in range(60):
+            votes[i] += cnt if (h >> i) & 1 else -cnt
+    return sum(1 << i for i in range(60) if votes[i] > 0)
+
+
+def test_simhash_matches_python_reference(spark):
+    """simhash() equals a pure-Python md5 replay bit for bit — an
+    engine-independent check next to the DuckDB oracle, whose SQL text
+    is written separately in plans/llm.py."""
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "The the THE the cat",  # repeats + case folding: weight 4 vs 1
+        3: "hello",  # one word: the fingerprint is that word's hash
+        4: "spark spark duckdb spark duckdb md5 md5 md5 md5",
+        5: "a b c d e f g h i j k l m n o p",
+    }
+    doc = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r.doc_id: r.simhash for r in simhash(doc, "doc_id", "text").collect()}
+    assert got == {k: _py_simhash(v) for k, v in texts.items()}
+    assert got[3] == int(hashlib.md5(b"hello").hexdigest()[:15], 16)
 
 
 def test_simhash_near_dups_symmetric_bounded(spark, sf_dir):

@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import datetime
 import os
+import random
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -113,15 +115,8 @@ _edges = st.lists(
 )
 
 
-@SETTINGS
-@given(_edges)
-def test_connected_components_matches_union_find(spark, edges):
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "src int, dst int")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    # reference union-find
+def _union_find(edges):
+    """Reference components: node -> min node id of its component."""
     parent = {}
 
     def find(x):
@@ -135,8 +130,55 @@ def test_connected_components_matches_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    return {n: find(n) for n in parent}
+
+
+@SETTINGS
+@given(_edges)
+def test_connected_components_matches_union_find(spark, edges):
+    edges = [(a, b) for a, b in edges if a != b]
+    if not edges:
+        return
+    df = spark.createDataFrame(edges, "src int, dst int")
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _union_find(edges)
+
+
+def test_connected_components_star_needs_one_probe(spark, monkeypatch):
+    """Star edges rooted at the cluster's min id (dedup_cluster_cc's
+    shape) are final after the label init, so exactly one superstep
+    runs, and its convergence probe (the loop's only count()) finds no
+    change."""
+    edges = [(3, 9), (3, 5), (3, 7), (11, 20), (11, 14), (11, 12)]
+    df = spark.createDataFrame(edges, "src int, dst int")
+    probes = []
+    count = type(df).count
+
+    def counting(self):
+        probes.append(self)
+        return count(self)
+
+    monkeypatch.setattr(type(df), "count", counting)
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    monkeypatch.undo()
+    assert got == _union_find(edges)
+    assert len(probes) == 1
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=RuntimeError,
+    reason="diameter cliff (ROADMAP.md item 2): min-label propagation "
+    "needs one superstep per hop, and a 64-node path exceeds max_iter",
+)
+def test_connected_components_long_path_matches_union_find(spark):
+    rng = random.Random(64)
+    ids = rng.sample(range(10_000), 64)
+    edges = list(zip(ids, ids[1:]))
+    rng.shuffle(edges)
+    df = spark.createDataFrame(edges, "src int, dst int")
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _union_find(edges)
 
 
 _docs = st.lists(

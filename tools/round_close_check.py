@@ -57,90 +57,35 @@ sys.path.insert(0, REPO)
 PY = sys.executable
 
 # Floor for step 5: the suite had this many tests when the floor was
-# last raised (round 14: +5 test_r14_opt.py optimization-invariant
-# tests). Raise it whenever tests are added; a collect run BELOW it
-# means a file silently fell out of collection.
-EXPECTED_MIN_TESTS = 1072
+# last raised (r15: the pure-Python simhash reference, the
+# connected-components star and long-path tests, and the registry
+# import test). Raise it whenever tests are added; a collect run BELOW
+# it means a file silently fell out of collection.
+EXPECTED_MIN_TESTS = 1077
 
-# Standing edited-op rule: ops whose CODE changed this round sit in the
-# window for a same-round re-cert; declared to cert_age_check
-# (and to tests/test_cert_age_check.py's live-repo invocation) via the
-# CERT_AGE_ELEVATED env. r13 — the SURVEY §7.4o deferred-fix wave
-# (every recipe was pre-pinned executable in tests/test_r13_prep.py
-# by r12; this round applies them):
-#   FLOOR(EPOCH) ORACLE MIGRATION (11 ops, oracle-side only; Spark
-#   untouched): DuckDB's CAST(FLOOR(EPOCH(ts)) AS BIGINT) goes
-#   through DOUBLE whose ulp at 10-digit epochs is ~2 us, so a
-#   .999999 fraction rounds UP and shifts the floor +1 s; replaced
-#   with the exact integer floor-mod form
-#   (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000))
-#   // 1000000 (plain // truncates toward zero and would break
-#   pre-epoch instants):
-#     join_asof_latest, join_asof_tolerance, win_lag_change,
-#     win_running_distinct, win_sessionize_gap, win_interpolate_linear,
-#     stream_stream_join, win_pattern_vshape, win_rolling_corr,
-#     win_range_time_interval, stream_sliding_sum.
-#   CROSS-ENGINE DIVERGENCE / STAGE-KILL CLOSERS:
-#     str_encode_b64_hex — strip [\r\n] from Spark base64() (MIME
-#       76-char chunking past 57-byte payloads; DuckDB is continuous);
-#     bit_ops — low-61-bit masked shift (x & 0x1FFFFFFFFFFFFFFF) << 2
-#       in BOTH engines (DuckDB throws on the unmasked shift at
-#       int64 extremes, Spark wraps — neither is portable);
-#     scan_xml_flatten — writer account id
-#       (c_custkey % 922337203685477580) * 10, oracle mirrored;
-#     scan_text_fixedwidth — FINWIRE CIK char(10) carries the
-#       mod-1e10 residue (consistent with the tpcdi dim builders)
-#       instead of silently truncating ids past 10 digits.
-# Deferred to r14 (the 50-window's 35-mandatory-r6 budget is full;
-# recipes pinned executable in tests/test_r14_prep.py):
-# scan_python_datasource's matching CIK residue, the _util.sql_epoch_s
-# floor-mod migration (+ its adopters tpcdi_dim_trade/events_funnel),
-# agg_first_last's NULL-symmetric order key (ADVICE r12 medium), and
-# the tpcdi_prospect_match negative-key contract note (ADVICE r12 low).
-# r13 OPTIMIZATION-ROUND ADDITIONS (appended after the 35-op r6 block
-# in _PRIORITY — the first-50 prefix is unchanged; the optimization
-# driver re-runs every declared query, so these get fresh r13 rows):
-#   MINHASH LIBRARY (llm/minhash.py, guide §2.4 — measured in
-#   OPTIMIZATION_r13.md): candidate_pairs now generates in-bucket
-#   pairs map-side from ONE sorted collect per band bucket (the old
-#   self-join evaluated the signature pipeline twice and paid a third
-#   window exchange for the occupancy cap); jaccard_verify applies
-#   the lossless size-ratio prefilter INLINE (sets built twice, not
-#   4x; joins halved). Adopters: dedup_minhash_lsh, dedup_simhash,
-#   dedup_eval_simhash_recall, dedup_cross_source_matrix,
-#   pipeline_incremental_dedup, pipeline_pretrain_e2e,
-#   stream_incremental_dedup.
-# r14 OPTIMIZATION-ROUND ELEVATIONS (computed mechanically by
-# tools/op_change_check.py against the r13 driver drop; every entry's
-# measured evidence is in OPTIMIZATION_r14.md):
-#   STATIC spread_scan GATE (_util.py; ADVICE r13 item 2) + pretrain
-#   single-evaluation dedup (localCheckpoint + contam-over-corpus) +
-#   occupancy-prefilter bounded candidate generators (llm/minhash.py,
-#   sim_rp inline, incremental-dedup one-pass probe) + inline LCG
-#   plane weights (sim_rp): agg_groupby_basic, join_broadcast,
-#   join_range_between, vec_covariance_matrix, vec_pca_power_iteration,
-#   vec_pca_project, vec_kmeans_refine, dedup_minhash_lsh,
-#   dedup_simhash, dedup_eval_simhash_recall, dedup_cross_source_matrix,
-#   pipeline_incremental_dedup, pipeline_pretrain_e2e, sim_rp_lsh_cosine.
-#   FUSED batch_e2e AUDIT + scd2_apply_incremental check_order param:
-#   tpcdi_batch_e2e, tpcdi_scd2_incremental.
-#   FUSED CC convergence flag (llm/components.py): dedup_cluster_cc,
-#   dedup_semantic_cluster.
-#   §7.4o r14 DEFERRED-FIX WAVE (tests/test_r14_prep.py recipes):
-#   FLOOR(EPOCH) floor-mod migration literal sites
-#   (dedup_latest_by_key, stream_session_window, stream_watermark_late,
-#   stream_foreachbatch_upsert) + sql_epoch_s adopters (tpcdi_dim_trade,
-#   events_funnel); scan_python_datasource CIK mod-1e10 residue;
-#   agg_first_last NULL-gated order key; tpcdi_prospect_match
-#   nonnegative-key contract note; audit_data_quality NULL-key
-#   pk-count fix (ADVICE r13 medium).
+# Standing edited-op rule: ops whose CODE changed since the last driver
+# drop sit in the window for a same-round re-cert; declared to
+# cert_age_check (and to the live-repo tests in
+# tests/test_cert_age_check.py and tests/test_op_change_check.py) via
+# the CERT_AGE_ELEVATED env. tools/op_change_check.py computes the
+# changed set mechanically. r15 (24 ops):
+#   - the 21 r14 optimization/fix rewrites that got no r14 driver row:
+#     the static spread_scan gate and single-evaluation pretrain dedup,
+#     the occupancy-bounded candidate generators (llm/minhash.py,
+#     sim_rp, incremental dedup), the fused batch_e2e audit, the fused
+#     connected-components convergence flag, and the FLOOR(EPOCH) /
+#     sql_epoch_s / CIK-residue fix wave;
+#   - dedup_cluster_cc, dedup_eval_simhash_recall and
+#     dedup_simhash_hamming: llm/simhash.py now builds the fingerprint
+#     aggregates as SQL text, and llm/components.py folds the first
+#     propagation step into the label init (dedup_simhash and
+#     dedup_semantic_cluster, also affected, are among the 21).
 ROUND_ELEVATIONS = (
-    "agg_first_last,agg_groupby_basic,audit_data_quality,"
-    "dedup_cluster_cc,dedup_cross_source_matrix,"
-    "dedup_eval_simhash_recall,dedup_latest_by_key,dedup_minhash_lsh,"
-    "dedup_semantic_cluster,dedup_simhash,events_funnel,"
-    "join_broadcast,join_range_between,pipeline_incremental_dedup,"
-    "pipeline_pretrain_e2e,scan_python_datasource,sim_rp_lsh_cosine,"
+    "dedup_cluster_cc,dedup_eval_simhash_recall,dedup_minhash_lsh,"
+    "dedup_semantic_cluster,dedup_simhash,dedup_simhash_hamming,"
+    "events_funnel,join_broadcast,join_range_between,"
+    "pipeline_incremental_dedup,pipeline_pretrain_e2e,"
+    "scan_python_datasource,sim_rp_lsh_cosine,"
     "stream_foreachbatch_upsert,stream_session_window,"
     "stream_watermark_late,tpcdi_batch_e2e,tpcdi_dim_trade,"
     "tpcdi_prospect_match,tpcdi_scd2_incremental,vec_covariance_matrix,"

@@ -1,21 +1,22 @@
 """Connected components over a pair/edge list — the clustering step of
 a dedup pipeline (near-dup *pairs* → dup *clusters* → keep-one).
 
-Pregel-style driver-coordinated min-label propagation: every node
-starts as its own component; each superstep pushes the smaller label
-across every edge (both directions) and keeps the per-node min. The
-loop is the one place this engine runs an action per iteration — the
-standard shape for iterative graph algorithms on Spark (GraphX/GraphFrames
-do the same under the hood), converging in O(component diameter)
-supersteps. Dedup graphs have tiny diameters (dup clusters are
-near-cliques), so 2-3 supersteps is typical; ``max_iter`` bounds the
-worst case.
+Pregel-style driver-coordinated min-label propagation: each node starts
+with the smallest id among itself and its neighbours (the first
+propagation step, folded into the label init); each superstep pushes
+the smaller label across every edge (both directions) and keeps the
+per-node min. The loop is the one place this engine runs an action per
+iteration — the standard shape for iterative graph algorithms on Spark
+(GraphX/GraphFrames do the same under the hood), converging in
+O(component diameter) supersteps. Dedup graphs have tiny diameters
+(dup clusters are stars or near-cliques), so one or two supersteps is
+typical; ``max_iter`` bounds the worst case.
 
 Scale posture: each superstep is one shuffle join (edges ⋈ labels on
 node id) plus one keyed min-aggregation — no driver-side data beyond
-the single convergence count. Label state is checkpoint-friendly
-(``localCheckpoint`` every few supersteps would truncate lineage on a
-real cluster; unnecessary at the bounded iteration counts used here).
+the single convergence count. Every superstep's labels are
+``localCheckpoint``ed: cached, and cut from the previous superstep's
+lineage, so the label plan does not grow by one join per superstep.
 """
 
 from __future__ import annotations
@@ -39,12 +40,17 @@ def connected_components(
     # Materialize once: every superstep re-reads the edge relation, and
     # without truncation each iteration would re-run the whole upstream
     # lineage (and the label plan would grow by one join per superstep —
-    # exponential analysis cost). localCheckpoint = cached + lineage cut.
-    both = both.localCheckpoint(eager=True)
+    # exponential analysis cost). localCheckpoint = cached + lineage cut;
+    # lazy, so the label-init job below fills it instead of a job of its
+    # own.
+    both = both.localCheckpoint(eager=False)
+    # init = one propagation step from the identity labelling: the
+    # grouped node set is exactly the distinct ``a`` set, and
+    # least(a, min(b)) is what the first superstep would produce, so
+    # the fixpoint is unchanged and star graphs start converged
     labels = (
-        both.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
+        both.groupBy(F.col("a").alias("node"))
+        .agg(F.least(F.col("a"), F.min("b")).alias("component"))
         .localCheckpoint(eager=True)
     )
     converged = False
@@ -52,15 +58,13 @@ def connected_components(
         msgs = both.join(labels, both.a == labels.node).select(
             F.col("b").alias("node"), F.col("component")
         )
-        # convergence flag FUSED into the label aggregation
-        # (optimization r14, guide §2.4): the old row rides the union
-        # with an _old marker, so min(component) and the node's
-        # previous component come out of the SAME groupBy — the former
-        # per-superstep probe join (a second shuffle job over both
-        # label sets) becomes a filter-scan of the already
-        # checkpointed result. Every node has exactly one old row, so
-        # _prev is never NULL and "changed" is exactly the old
-        # new≠old join predicate.
+        # convergence flag FUSED into the label aggregation: the old
+        # row rides the union with an _old marker, so min(component)
+        # and the node's previous component come out of the SAME
+        # groupBy — the probe is a filter-scan of the already
+        # checkpointed result, not a second shuffle job joining both
+        # label sets. Every node has exactly one old row, so _prev is
+        # never NULL and "changed" is exactly new≠old.
         new_labels = (
             labels.select("node", "component", F.lit(True).alias("_old"))
             .unionByName(msgs.withColumn("_old", F.lit(False)))

@@ -15,12 +15,12 @@ per word. Pair search blocks on 15-bit slices of the fingerprint (a
 Hamming-≤3 pair must agree exactly on ≥1 of 4 slices — pigeonhole),
 so the self-join is keyed, never cartesian.
 
-Why md5-derived instead of xxhash64 (round 3): with an engine-private
-hash the DuckDB oracle could only be the exact brute-force answer, so
-the certification silently depended on the capped candidate stage
-having full recall — which broke at sf0.1 (slice buckets above the
-occupancy cap dropped 5 true Hamming-≤3 pairs, and 2 high-Jaccard
-pairs sat at Hamming 39/49, outside any slice radius). With a hash
+Why md5-derived instead of xxhash64: with an engine-private hash the
+DuckDB oracle could only be the exact brute-force answer, so the
+certification would silently depend on the capped candidate stage
+having full recall — which does not hold at sf0.1 (slice buckets above
+the occupancy cap drop true Hamming-≤3 pairs, and some high-Jaccard
+pairs sit at Hamming 39/49, outside any slice radius). With a hash
 both engines compute, the oracle replays fingerprints, slicing, the
 occupancy cap, and the candidate join EXACTLY — the approximation is
 certified as specified at any scale instead of asserted empirically
@@ -64,19 +64,34 @@ def word_hash(col) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+# bit i of word-hash h votes +cnt if set, -cnt if clear
+_BITSUM_SQL = [
+    f"SUM(IF(((h >> {i}) & 1) = 1, cnt, -cnt)) AS b{i}" for i in range(SIMHASH_BITS)
+]
+# fingerprint bit i is set iff its vote sum is positive
+_FINGERPRINT_SQL = " + ".join(
+    f"IF(b{i} > 0, {1 << i}L, 0L)" for i in range(SIMHASH_BITS)
+)
+
+
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, simhash) — 60-bit fingerprint as a bigint.
 
     The 60 per-bit ±1 sums are plain conditional SUM aggregates over
     the exploded (doc, word-hash) relation: one groupBy(doc) shuffle
     whose payload is 60 longs per doc, all whole-stage codegen with
-    map-side partial aggregation. (An earlier version collected the
-    hash list per doc and folded it with per-bit `F.aggregate` HOF
-    lambdas — interpreted per element, measured ~3× slower at sf0.1,
-    the same anti-pattern the rp-LSH signature pass had.) Integer sums
-    are order-exact, so fingerprints are deterministic at any
-    parallelism. Tokenization is a single-space split (mirroring the
-    oracle's string_split), like the shingle ops.
+    map-side partial aggregation (a per-doc hash list folded with
+    per-bit `F.aggregate` lambdas is interpreted per element, ~3×
+    slower at sf0.1). Integer sums are order-exact, so fingerprints
+    are deterministic at any parallelism. Tokenization is a
+    single-space split (mirroring the oracle's string_split), like the
+    shingle ops.
+
+    The aggregates and the fingerprint sum are generated SQL text
+    (_BITSUM_SQL, _FINGERPRINT_SQL) parsed once each by ``F.expr``:
+    assembling the same ~190-node expressions one ``Column`` call at a
+    time costs thousands of py4j round trips per call before any job
+    runs.
     """
     words = df.select(
         F.col(id_col),
@@ -88,19 +103,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     # the (doc, word) pre-aggregation combines map-side
     wc = words.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("cnt"))
     hashed = wc.select(id_col, "cnt", word_hash(F.col("word")).alias("h"))
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
-            ).otherwise(-F.col("cnt"))
-        ).alias(f"b{i}")
-        for i in range(SIMHASH_BITS)
-    ]
-    per_doc = hashed.groupBy(id_col).agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        fp = fp + F.when(F.col(f"b{i}") > 0, F.lit(1 << i).cast("long")).otherwise(0)
-    return per_doc.select(id_col, fp.alias("simhash"))
+    per_doc = hashed.groupBy(id_col).agg(*[F.expr(e) for e in _BITSUM_SQL])
+    return per_doc.select(id_col, F.expr(_FINGERPRINT_SQL).alias("simhash"))
 
 
 def _chunk(col, i: int, chunk_bits: int = 15):

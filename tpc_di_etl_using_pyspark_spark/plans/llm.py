@@ -514,9 +514,9 @@ def dedup_simhash(spark: SparkSession, d: str) -> DataFrame:
     from ..llm.minhash import jaccard_verify, shingles
     from ..llm.simhash import simhash_candidate_pairs
 
-    # spread_scan (r13, guide §2.5): fingerprinting + shingling are
-    # map work over a one-task fixture scan (0.92 → 0.53 s at sf0.1);
-    # no-op on well-split inputs
+    # spread_scan: fingerprinting + shingling are map work over a
+    # one-task fixture scan (0.92 → 0.53 s at sf0.1); no-op on
+    # well-split inputs
     doc = spread_scan(t(spark, d, "documents"), "doc_id")
     # candidate relation replays cheaply off the localCheckpointed
     # chunk slices, so prune_sets' second evaluation of it is a join

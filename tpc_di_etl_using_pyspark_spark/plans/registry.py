@@ -25,120 +25,44 @@ _MODULES = [
 ]
 
 # Certification window rotation: the external driver certifies the
-# FIRST ~50 registry entries per round (CORRECTNESS_r0N.json). The op
-# surface is FROZEN at 291 (VERDICT r3 item 1; re-ratified every round
-# since, most recently VERDICT r9 item 6). The cumulative r1-r9 union
-# is 291/291 driver-certified green with zero red rows — the windows
-# are pure regression defense, rotated by CERT AGE.
+# FIRST ~50 registry entries per round (CORRECTNESS_r0N.json), so the
+# order of _PRIORITY decides which ops get a fresh driver row. The op
+# surface is frozen at 291, and every op has a green driver row; the
+# windows are regression defense, rotated by CERT AGE.
 #
-# _PRIORITY below is the FULL 291-op order, oldest driver cert first
-# (ties broken by position within that round's correctness file). The
-# rotation schedule (VERDICT r7 items 1+6; SURVEY §7.4g; mechanized in
-# tools/cert_age_check.py as round_close_check's final step):
+# _PRIORITY is the FULL 291-op order: the ops elevated for the upcoming
+# round, then every other op oldest driver cert first (ties broken by
+# position within that round's correctness file).
+# tools/cert_age_check.py recomputes this ledger from the
+# CORRECTNESS_r*.json files and fails when the staged window no longer
+# matches it. Its default window is max(50, over-age ops + elevations),
+# and no op outside it may pass the 6-round cert-age cap. A new driver
+# drop moves the upcoming round on by one, so this order has to be
+# restaged after every drop.
 #
-#   round 10 (done, 50/50 green): 17 age-7 r3 + 6 elevated + 27 r4
-#   round 11 (THIS round): rest of the r4 block (15) + 7 oldest r5
-#     + 28 elevated (the r11 hardening sweeps; see the window
-#     comments below — the elevations displaced 16 r5 ops to the r12
-#     head and pulled 12 ops forward out of the r6..r10 blocks)
-#   round 12 (done, 50/50 green): 24 age-7 r5 + 26 elevated (the
-#     extremes-probe hardening wave; displaced all 19 staged r6 ops
-#     plus agg_collect_sorted/str_url_parse to the r13 head)
-#   round 13 (done, 50/50 green): the full 35-op age-7 r6 block + 15
-#     elevated (the §7.4o deferred-fix wave; displaced all 15 staged
-#     r7 ops to the r14 head — of which 40 age-7 r7 ops remain after
-#     the r13 optimization elevations pulled several forward)
-#   round 14 (THIS round): window grown to 71 = the full 43-op
-#     over-age block (40 age-7 r7 + 3 oldest r8) + 28 optimization/
-#     fix elevations (cert_age_check's default window = over-age +
-#     elevations; the optimization driver re-runs every declared
-#     query, so a wide window starves nothing)
-#   round 15+: restart from whatever is then oldest (each block's
-#     green rows this cycle reset its age) — steady state keeps every
-#     op's cert age <= 6 rounds.
+# Standing rule: any op whose CODE changes in a round (its transitive
+# source, as hashed by tools/op_change_check.py against the last driver
+# drop) is elevated to the window front for a fresh driver row that
+# same round, and declared in ROUND_ELEVATIONS
+# (tools/round_close_check.py). Nothing is ever dropped from the
+# registry.
 #
-# Standing rule (VERDICT r7 item 3, re-ratified r8 item 6): any op
-# whose CODE changes in a round is elevated to the window front for a
-# fresh driver row that same round (the r7 vec_quantize_int8 pattern).
-# Nothing is ever dropped from the registry.
+# Round 15 window (58 = 24 elevated + 34 by cert age):
+#   - the 21 r14 rewrites that got no r14 driver row, plus
+#     dedup_cluster_cc, dedup_eval_simhash_recall and
+#     dedup_simhash_hamming, whose transitive source changed with the
+#     simhash SQL-text fingerprint and the connected-components label
+#     init (join_broadcast and join_range_between are also over-age);
+#   - the 32 remaining over-age ops (certs r8) and the 2 oldest r9
+#     ops, in ledger order.
 _PRIORITY = [
-    # --- ROUND-14 CERTIFICATION WINDOW (71 = 43 schedule + 28
-    #     ELEVATED), per the cert-age schedule above: the 40 remaining
-    #     age-7 r7 ops + the 3 oldest r8 ops (sort_multi, limit_n,
-    #     topk_per_group) form the mandatory schedule block, and every
-    #     op whose TRANSITIVE SOURCE changed in the r14 optimization
-    #     round is elevated for a same-round re-cert (declared in
-    #     ROUND_ELEVATIONS, tools/round_close_check.py; the elevation
-    #     set is computed mechanically by tools/op_change_check.py).
-    #     cert_age_check's default window grows to over-age block +
-    #     elevations (= 71 here), so no over-age op is starved.
-    #     r14 elevations: the pretrain single-evaluation dedup +
-    #     static spread_scan gate (minhash/simhash/covariance/kmeans
-    #     adopters), the occupancy-prefilter bounded candidate
-    #     generators (minhash lib, sim_rp inline, incremental-dedup
-    #     one-pass probe), the fused batch_e2e audit + check_order
-    #     lib param (tpcdi_scd2_incremental co-adopter), the fused CC
-    #     convergence flag (dedup_cluster_cc, dedup_semantic_cluster),
-    #     and the §7.4o r14 deferred-fix wave (FLOOR(EPOCH) floor-mod
-    #     migration sites, sql_epoch_s adopters, scan_python_datasource
-    #     CIK residue, agg_first_last NULL-gated key,
-    #     tpcdi_prospect_match contract note, audit_data_quality
-    #     NULL-key pk count).
-    # --- schedule block (43) ---
-    "text_pii_redact",
-    "text_normalize_unicode",
-    "sim_quantized_topk",
-    "text_length_histogram",
-    "text_contamination_ngram",
-    "text_repetition_score",
-    "text_quality_linear",
-    "graph_triangle_count",
-    "text_bpe_pair_count",
-    "vec_pca_domain_check",
-    "vec_quantize_int8",
-    "scan_parquet",
-    "scan_jsonl",
-    "scan_orc",
-    "sink_parquet",
-    "sink_bucketed",
-    "sink_table_overwrite_append",
-    "project_select",
-    "project_derive",
-    "project_rename_drop",
-    "filter_simple",
-    "filter_compound",
-    "filter_null",
-    "filter_like_regexp",
-    "join_inner_equi",
-    "join_multi_key",
-    "join_left_outer",
-    "join_right_full",
-    "join_semi",
-    "join_anti",
-    "join_theta_inequality",
-    "join_self_versioning",
-    "join_cross",
-    "join_skew_salted",
-    "agg_global",
-    "agg_count_distinct",
-    "agg_having",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "sort_multi",
-    "limit_n",
-    "topk_per_group",
-    # --- ROUND-14 OPTIMIZATION/FIX ELEVATIONS (28) ---
-    "agg_first_last",
-    "agg_groupby_basic",
-    "audit_data_quality",
+    # --- elevated (24) ---
     "dedup_cluster_cc",
-    "dedup_cross_source_matrix",
     "dedup_eval_simhash_recall",
-    "dedup_latest_by_key",
     "dedup_minhash_lsh",
     "dedup_semantic_cluster",
     "dedup_simhash",
+    "dedup_simhash_hamming",
     "events_funnel",
     "join_broadcast",
     "join_range_between",
@@ -157,7 +81,7 @@ _PRIORITY = [
     "vec_kmeans_refine",
     "vec_pca_power_iteration",
     "vec_pca_project",
-    # --- remainder, oldest driver cert first ---
+    # --- cert-age schedule block (34) ---
     "set_except",
     "dedup_exact",
     "sql_api_revenue_ranking",
@@ -192,6 +116,7 @@ _PRIORITY = [
     "pack_sequences_greedy",
     "str_collate_ci",
     "scan_csv_malformed",
+    # --- remainder, oldest driver cert first ---
     "tpcdi_scd2_dimcustomer",
     "tpcdi_fact_cash_balances",
     "tpcdi_fact_market_history",
@@ -216,7 +141,6 @@ _PRIORITY = [
     "text_keyword_topk",
     "multimodal_phash_neardup",
     "text_quality_gopher",
-    "dedup_simhash_hamming",
     "join_bloom_runtime_filter",
     "sim_ann_recall_eval",
     "sim_ivf_multiprobe_topk",
@@ -378,6 +302,54 @@ _PRIORITY = [
     "multimodal_join",
     "multimodal_binary_features",
     "multimodal_frame_sample",
+    "text_pii_redact",
+    "text_normalize_unicode",
+    "sim_quantized_topk",
+    "text_length_histogram",
+    "text_contamination_ngram",
+    "text_repetition_score",
+    "text_quality_linear",
+    "graph_triangle_count",
+    "text_bpe_pair_count",
+    "vec_pca_domain_check",
+    "vec_quantize_int8",
+    "scan_parquet",
+    "scan_jsonl",
+    "scan_orc",
+    "sink_parquet",
+    "sink_bucketed",
+    "sink_table_overwrite_append",
+    "project_select",
+    "project_derive",
+    "project_rename_drop",
+    "filter_simple",
+    "filter_compound",
+    "filter_null",
+    "filter_like_regexp",
+    "join_inner_equi",
+    "join_multi_key",
+    "join_left_outer",
+    "join_right_full",
+    "join_semi",
+    "join_anti",
+    "join_theta_inequality",
+    "join_self_versioning",
+    "join_cross",
+    "join_skew_salted",
+    "agg_global",
+    "agg_count_distinct",
+    "agg_having",
+    "set_union_all",
+    "set_union_distinct",
+    "set_intersect",
+    "sort_multi",
+    "limit_n",
+    "topk_per_group",
+    "agg_first_last",
+    "agg_groupby_basic",
+    "audit_data_quality",
+    "dedup_cross_source_matrix",
+    "dedup_latest_by_key",
 ]
 
 
@@ -385,10 +357,9 @@ def _collect() -> tuple[dict, dict]:
     queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     oracles: dict[str, str] = {}
     for mod_name in _MODULES:
-        try:
-            mod = import_module(f"{__package__}.{mod_name}")
-        except ModuleNotFoundError:
-            continue  # module not built yet (incremental rounds)
+        # no fallback: an import error inside a plans module must fail
+        # the registry, not silently drop that module's whole op family
+        mod = import_module(f"{__package__}.{mod_name}")
         for k, v in mod.QUERIES.items():
             if k in queries:
                 raise ValueError(f"duplicate op id {k!r} in {mod_name}")
