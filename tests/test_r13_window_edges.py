@@ -1,17 +1,15 @@
-"""Round-13 pre-certification edge tests, built TWO ROUNDS early
-(round 11; the standing §7.5-r8-item-4 enumeration, sixth execution):
-the 39 incoming-r13-window ops with no dedicated test anywhere in
-tests/ — the core relational family (filters, projections, every join
-flavor), the scan/sink format round-trips, the text-analysis second
-half, the similarity family, and the deterministic samplers. The
-probe wave behind this file found a REAL stage-killer: the naive
-Knuth-hash product id*2654435761 overflows signed 64-bit for ids
-beyond ~3.5e9 (ANSI ARITHMETIC_OVERFLOW — any corpus past ~3.5
-billion documents/customers kills the splitter), fixed by an
-overflow-free 16-bit-split multiply in llm._split_bucket and
-str_concat_phone's modular local number, elevated with the two
-transitive helper adopters (pipeline_corpus_curation,
-pipeline_pretrain_e2e — flagged by op_change_check).
+"""Determinism-edge tests for 39 ops that had no dedicated test
+anywhere in tests/ — the core relational family (filters, projections,
+every join flavor), the scan/sink format round-trips, the
+text-analysis second half, the similarity family, and the
+deterministic samplers. The probe wave behind this file found a REAL
+stage-killer: the naive Knuth-hash product id*2654435761 overflows
+signed 64-bit for ids beyond ~3.5e9 (ANSI ARITHMETIC_OVERFLOW — any
+corpus past ~3.5 billion documents/customers kills the splitter),
+fixed by an overflow-free 16-bit-split multiply in llm._split_bucket
+and str_concat_phone's modular local number; the fix also reaches the
+two transitive helper adopters (pipeline_corpus_curation,
+pipeline_pretrain_e2e).
 
 Boundaries pinned:
 - split hashing with ids ABOVE the old overflow bound, including the

@@ -11,8 +11,8 @@ matched). This probe runs the pandas-sort step itself on BOTH engines'
 outputs for every registry op — then value-hashes the sorted frame
 (`pd.util.hash_pandas_object`), covering BOTH halves of the driver's
 canonicalization — so any column pandas cannot sort OR hash —
-containers, mixed-type objects, anything future — fails HERE before a
-driver window burns a certification row on it.
+containers, mixed-type objects, anything future — fails HERE before
+the external driver red-rows it.
 
 Usage: python tools/driver_canon_probe.py [sf_dir] [op ...]
        (default sf_dir /root/testdata/sf0.001 — type shapes are
